@@ -1,7 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
+/** Times the SparkEntry queries at `SPARK_GRAFT_SF_DIR` and prints one
+  * JSON line (also written to `bench_out.json`). Arguments, if any, name
+  * the queries to time; none times every query. */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val selected = SparkEntry.select(args.toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -83,9 +87,9 @@ object Bench {
       }
       def sec: Double = if (failed || samples.isEmpty) -1.0 else samples.min
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val rec = new Rec(name, (s: SparkSession, dir: String) =>
-        fn(s, dir).write.format("noop").mode("overwrite").save())
+    val results = selected.sortBy(_.name).map { q =>
+      val rec = new Rec(q.name, (s: SparkSession, dir: String) =>
+        q.run(s, dir).write.format("noop").mode("overwrite").save())
       val loadBefore = loadAvg
       // min of two steady-state runs; when the two disagree by >1.5x a
       // transient was likely mid-flight, so spend ONE more sample — the

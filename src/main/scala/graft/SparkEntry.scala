@@ -22,4 +22,14 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The named queries in `all` order; an empty set selects every query.
+    * An unknown name fails here, before any session work, so a typo is
+    * never silently skipped. */
+  def select(names: Set[String]): Seq[Q] = {
+    val unknown = names -- all.map(_.name)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    if (names.isEmpty) all else all.filter(q => names(q.name))
+  }
 }

@@ -8,7 +8,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: restrict to the named queries (dev loop only —
     // the driver always passes exactly two args)
-    val only = args.drop(2).toSet
+    val selected = SparkEntry.select(args.drop(2).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_SHUFFLE decouples shuffle partitioning from thread
     // count for the partition-topology probe (VERDICT r10 #4): results
@@ -25,12 +25,11 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.isEmpty || only(name))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -953,9 +953,10 @@ object Dedup {
     * contract — `<dir>/line_hash_index` and `<dir>/line_hash_bloom` —
     * because the bloom build is an index-wide aggregate: paid per
     * batch it costs more than the exact route ever does (measured,
-    * ScaleProbe r11); paid once it amortizes across the ingest
-    * stream. Without a checkpointDir prefer [[lineDedupAgainst]]
-    * unless the same filter serves many batches in-session. */
+    * r11, NOTES.md Round 11 item 7, 'Bloom-vs-exact ingest crossover');
+    * paid once it amortizes across the ingest stream. Without a
+    * checkpointDir prefer [[lineDedupAgainst]] unless the same filter
+    * serves many batches in-session. */
   def lineDedupAgainstBloom(batch: DataFrame, corpus: DataFrame,
       expectedCorpusLines: Long = 1L << 20,
       checkpointDir: Option[String] = None): DataFrame = {
@@ -984,8 +985,8 @@ object Dedup {
     }
     // The FILTER BYTES are themselves a durable artifact when a
     // checkpointDir is given (r11, measured): rebuilding the bloom per
-    // ingest batch scans the whole index into an aggregate — ScaleProbe
-    // clocked that per-call build at ~5 s where the exact route's
+    // ingest batch scans the whole index into an aggregate — measured
+    // r11 (NOTES.md Round 11 item 7) at ~5 s where the exact route's
     // batch⋈index join costs 0.65 s, i.e. an UNCACHED bloom is strictly
     // worse at any corpus scale. With the artifact the steady state
     // reads one ~filter-sized parquet row per batch and the bloom's

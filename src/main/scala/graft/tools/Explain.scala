@@ -1,11 +1,19 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev tool: dump EXPLAIN FORMATTED for headline queries → PLANS.md,
-  * the artifact backing the scale-design claims in README. */
+import graft.queries.Q
+
+/** Dev tool: dump EXPLAIN FORMATTED plans.
+  *
+  * `Explain [sfDir]` writes the `headline` plans to PLANS.md, the
+  * artifact backing the scale-design claims in README.
+  * `Explain <sfDir> <outDir> <suffix> [name...]` writes one
+  * `<outDir>/<name>_<suffix>.txt` per named query (no names = every
+  * query): the per-round before/after evidence under `plans/`. */
 object Explain {
   val headline = Seq(
     "q01_agg_pushdown", "q02_filter_project", "q03_join_inner_agg",
@@ -72,20 +80,50 @@ object Explain {
     "x146_vocab_coverage")
 
   def main(args: Array[String]): Unit = {
+    require(args.length != 2,
+      "usage: Explain [sfDir] | Explain <sfDir> <outDir> <suffix> [name...]")
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    val dumpDir = if (args.length > 2) Some(Paths.get(args(1))) else None
+    val selected = graft.SparkEntry.select(
+      if (dumpDir.isDefined) args.drop(3).toSet else headline.toSet)
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    dumpDir match {
+      case Some(outDir) => dumpEach(spark, sfDir, outDir, args(2), selected)
+      case None => writePlansMd(spark, sfDir, selected)
+    }
+    spark.stop()
+  }
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+
+  private def dumpEach(spark: SparkSession, sfDir: String, outDir: Path,
+      suffix: String, selected: Seq[Q]): Unit = {
+    Files.createDirectories(outDir)
+    selected.foreach { q =>
+      try {
+        Files.writeString(outDir.resolve(s"${q.name}_$suffix.txt"),
+          formatted(q.run(spark, sfDir)))
+        println(s"[explain] wrote ${q.name}_$suffix.txt")
+      } catch {
+        case e: Throwable =>
+          println(s"[explain] ${q.name} FAILED: ${e.getMessage}")
+      }
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, sfDir: String,
+      selected: Seq[Q]): Unit = {
     val sb = new StringBuilder
     sb ++= "# Physical plans (EXPLAIN FORMATTED) — generated by graft.tools.Explain\n\n"
     sb ++= s"Data: `$sfDir`. Regenerate: `sbt \"runMain graft.tools.Explain\"`.\n"
-    graft.SparkEntry.all.filter(q => headline.contains(q.name)).foreach { q =>
-      val plan = q.run(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb ++= s"\n## ${q.name}\n\n```\n$plan```\n"
+    selected.foreach { q =>
+      sb ++= s"\n## ${q.name}\n\n```\n${formatted(q.run(spark, sfDir))}```\n"
     }
     // VERDICT r06 next #4: the pre-tokenized-overload plan — with the
     // token frame persisted by the caller, every corpus-stats branch
@@ -97,17 +135,14 @@ object Explain {
       val toks = docs.select(col("doc_id"),
         graft.ops.Text.tokens(col("text")).as("w")).persist()
       toks.count()
-      val plan = graft.ops.Relevance
-        .bm25Tokens(toks, Seq("data", "model", "the"), 20)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+      val plan = formatted(graft.ops.Relevance
+        .bm25Tokens(toks, Seq("data", "model", "the"), 20))
       sb ++= "\n## x27p_bm25_pretokenized (bm25Tokens over a persisted " +
         "token frame — single tokenize, cache-fed branches)\n\n```\n" +
         plan + "```\n"
       toks.unpersist(blocking = false)
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${headline.size + 1} plans)")
-    spark.stop()
+    println(s"wrote PLANS.md (${selected.size + 1} plans)")
   }
 }
