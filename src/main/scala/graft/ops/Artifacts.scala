@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.tables.Tables
+
 /**
  * Durable parquet artifacts for expensive derived tables (MinHash
  * signature tables, LSH pair sets, IVF inverted indexes): the persist()
@@ -12,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * Validity is decided by a METADATA-ONLY fingerprint: params + the input
  * DataFrame's file paths, sizes and mtimes — no data scan. The marker is
  * stamped AFTER the data lands, so a crash mid-write leaves an invalid
- * artifact the next run rebuilds.
+ * artifact the next run rebuilds. A warm read is metadata-only too: the
+ * marker check plus one parquet footer read on the driver, no Spark job.
  */
 private[ops] object Artifacts {
 
@@ -45,8 +48,17 @@ private[ops] object Artifacts {
       java.security.MessageDigest.getInstance("MD5").digest(bytes))
   }
 
-  /** Read-through parquet materialization: reuse `path` when its marker
-    * matches `fp`, else build and publish.
+  /** Read-through parquet materialization: [[ensureBuilt]], then read
+    * `path` with its schema from one footer on the driver
+    * ([[graft.tables.Tables.readParquet]]) — a warm read costs no Spark
+    * job, where schema inference would start one per artifact. */
+  def parquetCheckpoint(spark: SparkSession, path: String, fp: String)(
+      build: => DataFrame): DataFrame = {
+    ensureBuilt(spark, path, fp)(build)
+    Tables.readParquet(spark, path)
+  }
+
+  /** Build and publish `path` unless its marker already matches `fp`.
     *
     * Publication is staged (ADVICE r10): the rebuild lands in a sibling
     * `<path>.__build` dir, the marker is stamped INSIDE it while it is
@@ -58,8 +70,8 @@ private[ops] object Artifacts {
     * lose files under itself, so same-artifact concurrent harness runs
     * stay out of contract (the ckptDir SF-keying handles the cross-SF
     * case; the bench runs alone by contract). */
-  def parquetCheckpoint(spark: SparkSession, path: String, fp: String)(
-      build: => DataFrame): DataFrame = {
+  def ensureBuilt(spark: SparkSession, path: String, fp: String)(
+      build: => DataFrame): Unit =
     if (!isValid(spark, path, fp)) {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -73,8 +85,6 @@ private[ops] object Artifacts {
         throw new java.io.IOException(
           s"failed to publish artifact $tmp -> $p (concurrent writer?)")
     }
-    spark.read.parquet(path)
-  }
 
   /** Stamp `path`'s validity marker AFTER its data landed — the
     * underscore prefix keeps the marker invisible to Spark's file index

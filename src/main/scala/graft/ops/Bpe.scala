@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.BpeExprs
+import graft.tables.Tables
 
 /**
  * BPE token budgeting surface for the training-data pipeline (VERDICT
@@ -283,7 +284,7 @@ object Bpe {
   /** Load a [[saveMerges]] table back in rank order. */
   def loadMerges(spark: SparkSession, path: String): Seq[(String, String)] = {
     import spark.implicits._
-    spark.read.parquet(path).orderBy("rank")
+    Tables.readParquet(spark, path).orderBy("rank")
       .select(col("l"), col("r")).as[(String, String)].collect().toSeq
   }
 

@@ -16,8 +16,9 @@ import org.apache.spark.sql.DataFrame
  * SF-keyed stage dir), or ANY change to the staging transformation
  * (coalesce count, range partitioning, union shape) re-fingerprints and
  * rebuilds — the staged bytes can never go stale silently. Publication
- * is the atomic temp-dir + rename of [[Artifacts.parquetCheckpoint]],
- * so a crashed build is invisible to the next run.
+ * is the atomic temp-dir + rename of [[Artifacts.ensureBuilt]], so a
+ * crashed build is invisible to the next run. Nothing is read back: the
+ * replay reads the staged directory itself.
  */
 object Staging {
 
@@ -30,6 +31,6 @@ object Staging {
   def writeParquetOnce(df: DataFrame, path: String,
       params: String = ""): Unit = {
     val fp = Artifacts.fingerprint(df, s"stage-v1|$params")
-    Artifacts.parquetCheckpoint(df.sparkSession, path, fp)(df)
+    Artifacts.ensureBuilt(df.sparkSession, path, fp)(df)
   }
 }
